@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{CellTopK, LongArrayDot, PackedBagDistance, PackedLetterBag, RandProjExpr, StringRollingHash, TopKAgg, UriEncode}
 
-/** Engine extension point, installed the documented production way:
+/** Engine extension point — REQUIRED by every session that runs engine
+  * ops, installed the one documented way:
   *
   * {{{
   *   SparkSession.builder()
@@ -14,10 +15,11 @@ import graft.expressions.{CellTopK, LongArrayDot, PackedBagDistance, PackedLette
   *
   * Registers the engine's native expressions into the session's
   * function registry so they are callable from BOTH the DataFrame API
-  * (`call_function("graft_dot", a, b)`) and plain SQL. Operators probe
-  * `spark.catalog.functionExists` and fall back to the equivalent
-  * built-in higher-order-function form when the extension is not
-  * installed, so nothing breaks in a vanilla session.
+  * (`call_function("graft_dot", a, b)`) and plain SQL, plus the two
+  * optimizer rules and the as-of planner strategy below. Operators call
+  * the native kernels unconditionally: in a session without the
+  * extension the analyzer rejects the first `graft_*` call with an
+  * `UNRESOLVED_ROUTINE` error naming the function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The argmin/argmax aggregation device (r15): `max(struct(...))` /
@@ -17,16 +17,14 @@ import org.apache.spark.sql.functions._
   * `largest1(s) ≡ max(s)` row-for-row; argmin callers negate the
   * ordering fields (strictly order-reversing on the integer ranges in
   * use) and un-negate on unpack.
-  *
-  * Falls back to the declarative form when the session lacks the
-  * extension (vanilla sessions keep the previous plan).
   */
 private[graft] object BestAgg {
 
   /** The single LARGEST value of `ordered` in the group — `max(ordered)`
-    * with an ObjectHashAggregate plan when `graft_topk` is installed. */
-  def largest1(spark: SparkSession, ordered: Column): Column =
-    if (spark.catalog.functionExists("graft_topk"))
-      element_at(call_function("graft_topk", ordered, lit(1)), 1)
-    else max(ordered)
+    * as an ObjectHashAggregate. `get` (not `element_at`) reads the heap:
+    * a group whose inputs are all NULL yields an empty heap, and under
+    * ANSI mode `element_at(<empty>, 1)` throws where `get` returns NULL
+    * — the `max` law for an all-null group. */
+  def largest1(ordered: Column): Column =
+    get(call_function("graft_topk", ordered, lit(1)), lit(0))
 }

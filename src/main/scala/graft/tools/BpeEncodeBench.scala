@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness (not part of the engine surface): measure the fixpoint
@@ -22,13 +21,7 @@ object BpeEncodeBench {
     val dir = args.headOption.getOrElse("/tmp/graft_bpe_open")
     val merges = args.lift(1).map(_.toInt).getOrElse(256)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Verify.buildSession("32")
     import graft.operators.Bpe
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -50,7 +50,7 @@ object ImiAsymProbe {
         $"v".as("vd"), $"n2".as("nd"))
       val got = pa.join(pb, Seq("cell")).filter($"src" =!= $"dst")
         .select($"src", $"dst",
-          Similarity.cosine(Similarity.idot(spark, $"vs", $"vd"),
+          Similarity.cosine(Similarity.idot($"vs", $"vd"),
             $"ns", $"nd").as("cos"))
         .groupBy($"src")
         .agg(max(struct($"cos", negate($"dst").as("nd"))).as("best"))
@@ -59,7 +59,7 @@ object ImiAsymProbe {
       val y = e.select($"vec_id".as("dst"), $"v".as("vd"), $"n2".as("nd"))
       val truth = x.join(y, $"src" =!= $"dst")
         .select($"src", $"dst",
-          Similarity.cosine(Similarity.idot(spark, $"vs", $"vd"),
+          Similarity.cosine(Similarity.idot($"vs", $"vd"),
             $"ns", $"nd").as("cos"))
         .groupBy($"src")
         .agg(max(struct($"cos", negate($"dst").as("nd"))).as("best"))
@@ -78,7 +78,7 @@ object ImiAsymProbe {
         .filter($"qa" =!= $"hb")
         .select($"label",
           least($"qa", $"hb").as("id_a"), greatest($"qa", $"hb").as("id_b"),
-          Similarity.cosine(Similarity.idot(spark, $"va", $"vb"),
+          Similarity.cosine(Similarity.idot($"va", $"vb"),
             $"na", $"nb").as("cos"))
         .distinct()
         .filter($"cos" >= 0.35)

@@ -55,7 +55,7 @@ object ImiMillionSoak {
             .cast("double") / 1e6) - 0.5).cast("float")).as("embedding"))
         .select(col("vec_id"), col("label"),
           quantize(col("embedding")).as("v"))
-        .withColumn("n2", inorm2(spark, col("v")))
+        .withColumn("n2", inorm2(col("v")))
         .filter(col("n2") > 0)
 
     val e = genQuantized(nVecs).localCheckpoint()
@@ -72,11 +72,11 @@ object ImiMillionSoak {
 
     // --- retrain-on-union index (the full-train reference) ---
     val cbAll = timed("train codebook (union)") {
-      Imi.codebook(spark, Imi.halves(spark, e), k1, Imi.LloydSteps)
+      Imi.codebook(Imi.halves(e), k1, Imi.LloydSteps)
         .localCheckpoint()
     }
     val cellsAll = timed("assign all vs union codebook") {
-      Imi.cellsWithCodebook(spark, e, cbAll, np)
+      Imi.cellsWithCodebook(e, cbAll, np)
         .select(col("vec_id"), col("cell"), col("r0"), col("r1"))
         .localCheckpoint()
     }
@@ -108,11 +108,11 @@ object ImiMillionSoak {
     val deltaMod = 4
     val standing = e.filter(col("vec_id") % deltaMod =!= 0)
     val cbStand = timed("train codebook (standing 75%)") {
-      Imi.codebook(spark, Imi.halves(spark, standing), k1, Imi.LloydSteps)
+      Imi.codebook(Imi.halves(standing), k1, Imi.LloydSteps)
         .localCheckpoint()
     }
     val cellsMerge = timed("assign all vs standing codebook") {
-      Imi.cellsWithCodebook(spark, e, cbStand, np)
+      Imi.cellsWithCodebook(e, cbStand, np)
         .select(col("vec_id"), col("cell"))
         .localCheckpoint()
     }
@@ -130,7 +130,7 @@ object ImiMillionSoak {
           col("n2").as("tn")))
         .filter(col("q") =!= col("t"))
         .select(col("q"), col("t"),
-          cosine(idot(spark, col("qv"), col("tv")), col("qn"), col("tn"))
+          cosine(idot(col("qv"), col("tv")), col("qn"), col("tn"))
             .as("cos"))
         .groupBy(col("q"))
         .agg(max(struct(col("cos"), negate(col("t")).as("nt"))).as("b"))

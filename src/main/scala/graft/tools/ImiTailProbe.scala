@@ -47,7 +47,7 @@ object ImiTailProbe {
     t("scored co-cell rows")(
       va.join(vb, Seq("cell")).filter(col("src") =!= col("dst"))
         .select(col("cell"), col("src"), col("dst"),
-          Similarity.cosine(Similarity.idot(spark, col("vs"), col("vd")),
+          Similarity.cosine(Similarity.idot(col("vs"), col("vd")),
             col("ns"), col("nd")).as("cos"))
         .filter(col("cos") > -2.0).count())
     t("full knn tail (via op)")(
@@ -70,7 +70,7 @@ object ImiTailProbe {
               m => m.getField("vec_id") =!= s.getField("vec_id")),
             m => {
               val c = Similarity.cosine(
-                Similarity.idot(spark, s.getField("v"), m.getField("v")),
+                Similarity.idot(s.getField("v"), m.getField("v")),
                 s.getField("n2"), m.getField("n2"))
               struct(negate(c).as("ncos"),
                 m.getField("vec_id").as("nn_id"))

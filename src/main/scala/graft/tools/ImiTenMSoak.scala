@@ -71,7 +71,7 @@ object ImiTenMSoak {
             .cast("double") / 1e6) - 0.5).cast("float")).as("embedding"))
         .select(col("vec_id"), col("label"),
           quantize(col("embedding")).as("v"))
-        .withColumn("n2", inorm2(spark, col("v")))
+        .withColumn("n2", inorm2(col("v")))
         .filter(col("n2") > 0)
 
     val e = genQuantized(nVecs).localCheckpoint()
@@ -89,8 +89,7 @@ object ImiTenMSoak {
     }
 
     val cb = timed(s"train codebook (sample $trainN, 1 Lloyd)") {
-      Imi.codebook(spark,
-        Imi.halves(spark, e.filter(col("vec_id") < trainN.toLong)),
+      Imi.codebook(Imi.halves(e.filter(col("vec_id") < trainN.toLong)),
         k1, Imi.LloydSteps).localCheckpoint()
     }
 
@@ -128,7 +127,7 @@ object ImiTenMSoak {
     }
 
     val cellsU = timed("assign (probed cells, uniform)") {
-      Imi.cellsWithCodebook(spark, e, cb, np)
+      Imi.cellsWithCodebook(e, cb, np)
         .select(col("vec_id"), col("cell"), col("r0"), col("r1"))
         .localCheckpoint()
     }
@@ -141,8 +140,7 @@ object ImiTenMSoak {
     // EXACTLY uniform-cells ∪ (vector 0's probed cells × HotCopies
     // fresh ids) — the flood costs one 1-vector assignment, and the
     // skew lands where it matters: in the cell aggregates.
-    val dupCells = Imi.cellsWithCodebook(spark,
-        e.filter(col("vec_id") === 0), cb, np)
+    val dupCells = Imi.cellsWithCodebook(e.filter(col("vec_id") === 0), cb, np)
       .select(col("cell"), col("r0"), col("r1"))
     val cellsHot = cellsU.unionByName(
       spark.range(HotCopies.toLong)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiler (not part of the library surface): break
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfileStreamBod {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Verify.buildSession("32")
     def timed[T](tag: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body

@@ -1,11 +1,20 @@
 package graft.expressions
 
 import graft.SparkSpec
-import graft.functions.TextAnalysis
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class StringRollingHashSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Built-in higher-order-function form of
+    * [[graft.functions.TextAnalysis.fingerprint]] — the equivalence
+    * baseline the native expression is property-tested against. */
+  private def fingerprintHof(text: Column): Column =
+    aggregate(
+      transform(split(text, ""), c => ascii(c).cast("long")),
+      lit(0L),
+      (acc, x) => (acc * 31 + x) % 1000000007L)
 
   test("graft_fingerprint registered, callable from SQL and API, known values") {
     assert(spark.catalog.functionExists("graft_fingerprint"))
@@ -28,7 +37,7 @@ class StringRollingHashSpec extends SparkSpec {
     val df = samples.zipWithIndex.map { case (s, i) => (i, s) }.toDF("id", "s")
     val native = df.select($"id", call_function("graft_fingerprint", $"s").as("fp"))
       .as[(Int, Long)].collect().toMap
-    val hof = df.select($"id", TextAnalysis.fingerprintHof($"s").as("fp"))
+    val hof = df.select($"id", fingerprintHof($"s").as("fp"))
       .as[(Int, Long)].collect().toMap
     assert(native === hof)
   }
@@ -37,7 +46,7 @@ class StringRollingHashSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, sf001)
     val native = d.select($"doc_id", call_function("graft_fingerprint", $"text").as("fp"))
       .as[(Long, Long)].collect().toMap
-    val hof = d.select($"doc_id", TextAnalysis.fingerprintHof($"text").as("fp"))
+    val hof = d.select($"doc_id", fingerprintHof($"text").as("fp"))
       .as[(Long, Long)].collect().toMap
     assert(native === hof)
   }

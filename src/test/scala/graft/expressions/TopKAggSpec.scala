@@ -42,6 +42,21 @@ class TopKAggSpec extends SparkSpec {
     assert(out(2) === Seq(4))
   }
 
+  test("largest1 over an all-null group is NULL under ANSI mode (max law)") {
+    // graft_topk skips nulls, so an all-null group leaves an empty
+    // heap; reading slot 0 must yield NULL, not an ANSI index error
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val df = Seq((1, Some(3)), (1, Some(9)), (1, None),
+      (2, Option.empty[Int]), (2, Option.empty[Int])).toDF("g", "v")
+      .repartition(3)
+    val out = df.groupBy("g")
+      .agg(graft.operators.BestAgg.largest1(col("v")).as("b"),
+        max(col("v")).as("m"))
+      .collect().map(r => r.getInt(0) -> (r.get(1), r.get(2))).toMap
+    assert(out(1) === ((9, 9)))
+    assert(out(2) === ((null, null)))
+  }
+
   test("arity and k validation are analysis-time errors") {
     intercept[Exception](spark.sql("SELECT graft_topk(1) FROM range(1)"))
     intercept[Exception](

@@ -45,8 +45,8 @@ class UriEncodeSpec extends SparkSpec {
     val df = inputs.toDF("s")
     val native = df.select(call_function("graft_uri_encode", col("s")))
       .as[String].collect().toSeq
-    // force the fallback branch by asking for a session without the
-    // graft functions: probe on a name that never exists
+    // the same law spelled in built-in higher-order functions over the
+    // UTF-8 hex pairs: an independent reference for the native kernel
     val fallbackCol = {
       val bytes = encode(col("s"), "UTF-8")
       val hx = upper(hex(bytes))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** [[Similarity.randProj]] — the signed Johnson–Lindenstrauss
@@ -9,18 +10,55 @@ import org.apache.spark.sql.functions._
   * claim rests on: squared norms and pairwise squared distances land
   * near k·(the int8 originals) with bounded tails — the property the
   * xorshift round in the sign hash was added for (the raw LCG's
-  * correlated signs measured ratio tails at 6×; see rpSign scaladoc),
+  * correlated signs measured ratio tails at 6×; see RandProjExpr.sign),
   * and (3) the map-only shape: zero exchanges before the output. */
 class RandProjSpec extends SparkSpec {
   import spark.implicits._
 
   private val K = Similarity.RandProjDim
 
-  /** The exact sign hash of Similarity.rpSign, replayed in test code. */
+  /** The exact sign hash of RandProjExpr.sign, replayed in test code. */
   private def sign(i: Long, j: Long): Long = {
     val h1 = (i * 2654435761L + j * 1103515245L + 12345L) % 2147483648L
     val h2 = h1 ^ (h1 >> 13)
     if (((h2 * 1274126177L) % 2147483648L >> 16) % 2 == 0) 1L else -1L
+  }
+
+  /** The ±1 sign of [[graft.expressions.RandProjExpr.sign]] as a
+    * built-in Column expression (the hash law the oracle SQL spells). */
+  private def rpSign(i: Column, j: Column): Column = {
+    val h1 = (i.cast("long") * 2654435761L + j.cast("long") * 1103515245L
+      + 12345L) % 2147483648L
+    val h2 = h1.bitwiseXOR(shiftright(h1, 13))
+    when(shiftright((h2 * 1274126177L) % 2147483648L, 16) % 2 === 0, 1L)
+      .otherwise(-1L)
+  }
+
+  /** The built-in HOF form of the projection — the parity reference
+    * for the native expression (fold ≡ native element-wise, including
+    * null elements: a null cell quantizes to 0 — the `coalesce` below —
+    * exactly as the native expression's `isNullAt` branch contributes
+    * 0).
+    *
+    * Evaluation shape is load-bearing: a `transform(dims, j =>
+    * aggregate(qv …))` form references `qv`/`scale` once each, so
+    * CollapseProject INLINES them into the lambda bodies — `qv`
+    * recomputes per output dim and `scale` per element, O(d²·k)
+    * interpreted evals per row (measured 22 s at sf0.1, vs 3.1 s for
+    * this single-fold form, vs 0.1 s native). The fold pins ONE scale
+    * eval per row via `array_repeat` and accumulates all k output dims
+    * in ONE pass over the zipped (q, i) pairs. */
+  private def randProjFold(emb: Column): Column = {
+    val dims = sequence(lit(0), lit(K - 1))
+    val qv = zip_with(emb,
+      array_repeat(Similarity.int8Scale(emb), size(emb)),
+      (x, s) => coalesce(round(x.cast("double") * s).cast("long"), lit(0L)))
+    aggregate(
+      zip_with(qv, sequence(lit(0), size(emb) - 1),
+        (q, i) => struct(q.as("q"), i.as("i"))),
+      transform(dims, _ => lit(0L)),
+      (acc, t) => zip_with(acc, dims,
+        (a, j) => a + t.getField("q") * rpSign(t.getField("i"), j)))
   }
 
   test("hand vector: unit basis vector projects to 127 times the sign row") {
@@ -79,7 +117,7 @@ class RandProjSpec extends SparkSpec {
     val native = e.select($"vec_id",
       call_function("graft_randproj", $"embedding", lit(K)).as("pv"))
     val fold = e.select($"vec_id",
-      Similarity.randProjFold($"embedding").as("pv"))
+      randProjFold($"embedding").as("pv"))
     val diff = native.as("n").join(fold.as("f"), "vec_id")
       .filter(expr("n.pv != f.pv")).count()
     assert(diff === 0L, s"$diff vectors diverge between native and fold")
@@ -93,7 +131,7 @@ class RandProjSpec extends SparkSpec {
     val en = edges.select($"vec_id",
       call_function("graft_randproj", $"embedding", lit(K)).as("pv"))
     val ef = edges.select($"vec_id",
-      Similarity.randProjFold($"embedding").as("pv"))
+      randProjFold($"embedding").as("pv"))
     val ed = en.as("n").join(ef.as("f"), "vec_id")
       .filter(expr("n.pv != f.pv")).count()
     assert(ed === 0L, "edge vectors diverge between native and fold")

@@ -17,6 +17,14 @@ set -e -o pipefail
 cd "$(dirname "$0")/.."
 MODE="${1:-full}"
 
+echo "== gate: one kernel path (GraftExtensions is required) =="
+# engine code calls the native graft_* kernels unconditionally: no
+# catalog probe choosing a second built-in path, and no per-call
+# planner-strategy install besides the extension's own
+if grep -rnE 'functionExists|extraStrategies *=' src/main; then
+  echo "== gate: FALLBACK PROBE OR STRATEGY INSTALL UNDER src/main =="; exit 1
+fi
+
 echo "== gate: Verify @ sf0.01 =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
 python3 tools/check.py /root/testdata/sf0.01 /tmp/verify_out
