@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * word-TYPE table, which Heaps' law keeps sublinear in corpus size
   * (and which a closed vocabulary saturates outright — the fixture
   * measures exactly that). Per round: one pair-count aggregate over
-  * the types (partial agg, then a k=1 `TakeOrderedAndProject` argmax —
-  * never a global sort) and one map-only greedy merge fold; each round
-  * is `localCheckpoint`ed like [[GraphOps.connectedComponents]]'
-  * iterates so lineage stays flat. The merge table itself is O(rounds)
+  * the types (partial agg, then a small `TakeOrderedAndProject` top-k
+  * — never a global sort) and one map-only greedy merge fold that
+  * commits every merge of the round's exact batch (see
+  * [[trainWithVocab]]); each round is `localCheckpoint`ed like
+  * [[GraphOps.connectedComponents]]' iterates so lineage stays flat. The merge table itself is O(rounds)
   * metadata — the tokenizer artifact — and PERSISTS at rest
   * ([[PersistedStore]] `bpe_merges`, ninth+1 store): train once next
   * to the corpus, every encoder (a new session, another process, the
@@ -288,26 +289,37 @@ object Bpe {
 
   /** BPE induction over (text) rows: the merge table
     * (merge_rank, left_sym, right_sym, pair_count), rank 1..numMerges
-    * (fewer iff the pair space exhausts first). The loop is
-    * driver-steered but every step is distributed: argmax rides a
-    * 1-row `TakeOrderedAndProject`, the winning pair re-enters the
-    * plan via a broadcast cross join (1 row — never a collected
-    * data-scaled value), and each round's vocab is checkpointed so
-    * round r+1's lineage starts flat. */
-  def train(docs: DataFrame, numMerges: Int = NumMerges): DataFrame = {
-    val (m, v) = trainWithVocab(docs, numMerges)
+    * (fewer iff the pair space exhausts first) — the published
+    * sequential greedy table, computed by the batched loop of
+    * [[trainWithVocab]] at its default batch. */
+  def train(docs: DataFrame, numMerges: Int = NumMerges): DataFrame =
+    trainBatched(docs, numMerges)
+
+  /** [[train]] at an explicit `batch` (the most merges one round may
+    * commit). The merge table is the same at every batch size; only
+    * the round count changes. `onRound` observes (round,
+    * acceptedMerges) after each committed round — telemetry only
+    * (e.g. a round count for a timing harness); the default is a no-op
+    * and the merge table is unaffected. */
+  def trainBatched(docs: DataFrame, numMerges: Int = NumMerges,
+      batch: Int = 32,
+      onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
+    val (m, v) = trainWithVocab(docs, numMerges, batch, onRound)
     SessionCache.releaseFrame(v)
     m
   }
 
-  /** BATCHED induction — the production job-cadence fix for the
-    * driver-steered round loop (a real tokenizer is 30k–100k merges;
-    * at ~2 Spark jobs per merge that is a six-figure sequential job
-    * storm; this variant spends the same 2 jobs per ROUND and commits
-    * up to `batch` merges each round), PROVABLY equivalent to
-    * sequential greedy — not an approximation. The accepted batch is
-    * the maximal ranked prefix (cnt DESC, a, b — the sequential
-    * order) that is
+  /** The exact induction loop: the merge table plus the FINAL
+    * segmented vocab (w, freq, syms) — the other half of the tokenizer
+    * artifact (merges drive encoding of unseen text; the segmented
+    * vocab is the subword inventory and the fast path for seen types).
+    * The caller owns the vocab frame's checkpoint blocks.
+    *
+    * Each round commits up to `batch` merges (a real tokenizer is
+    * 30k–100k merges; one merge per round would be a six-figure
+    * sequential job storm), PROVABLY equivalent to sequential greedy —
+    * not an approximation. The accepted batch is the maximal ranked
+    * prefix (cnt DESC, a, b — the sequential order) that is
     *
     *  (1) pairwise symbol-disjoint (stop at the FIRST pair sharing a
     *      symbol with an earlier accept — skipping would diverge), and
@@ -325,100 +337,89 @@ object Bpe {
     * argmax at inner step i is exactly batch member i. The head pair
     * is always accepted alone if the cutoff bites immediately (batch
     * of 1 ≡ one sequential step), so progress is guaranteed and the
-    * merge table — ranks, symbols, recorded counts — is IDENTICAL to
-    * [[train]]'s (BpeSpec pins batched ≡ the plain-Scala sequential
-    * reference at several batch sizes, plus batched ≡ [[train]] on
-    * real data).
+    * merge table — ranks, symbols, recorded counts — is the
+    * sequential one; the vocab is too, since the same merges apply in
+    * the same rank order (BpeSpec pins both against the plain-Scala
+    * sequential reference at several batch sizes and on real data).
     *
-    * Per round: one (batch+1)-row `TakeOrderedAndProject` argmax (the
-    * collected rows are O(batch) metadata, same adjudication as the
-    * 8-row merge-table reads), then ONE map-only fold applying the
-    * whole batch in rank order, then the round checkpoint.
-    *
-    * `onRound` observes (round, acceptedMerges) after each committed
-    * round — telemetry only (the BpeTrainBench occupancy measurement);
-    * the default is a no-op and the merge table is unaffected. */
-  def trainBatched(docs: DataFrame, numMerges: Int = NumMerges,
+    * Per round ([[induce]]): one (batch+1)-row `TakeOrderedAndProject`
+    * top-k over a partial-agg pair count, then ONE map-only fold
+    * applying the whole batch in rank order. */
+  def trainWithVocab(docs: DataFrame, numMerges: Int = NumMerges,
       batch: Int = 32,
-      onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
+      onRound: (Int, Int) => Unit = (_, _) => ())
+      : (DataFrame, DataFrame) =
+    induce(docs, Int.MaxValue, numMerges,
+      done => math.min(batch, numMerges - done) + 1, onRound) {
+      (top, done) =>
+        val want = math.min(batch, numMerges - done)
+        // maximal disjoint prefix + strict cutoff (see scaladoc)
+        val used = scala.collection.mutable.Set.empty[String]
+        val prefix = top.take(want).takeWhile { case (a, b, _) =>
+          val free = !used(a) && !used(b)
+          used += a; used += b
+          free
+        }
+        // the first pair left out is the cutoff witness: a conflicted
+        // pair, or the (want+1)-th row — pairs beyond the window could
+        // tie with the accepted tail
+        val cutoff = top.lift(prefix.size).map(_._3).getOrElse(0L)
+        val safe = prefix.takeWhile(_._3 > cutoff)
+        if (safe.nonEmpty) safe else prefix.take(1) // ≡ one sequential step
+    }
+
+  /** The round loop both trainers share. Per round: the top
+    * `topN(done)` adjacent pairs in sequential order (cnt DESC, a, b)
+    * are collected — O(topN) metadata, never data-scaled — and
+    * `accept(top, done)` picks the symbol-disjoint merges to commit, in
+    * rank order; ONE map-only fold applies them to the word-type vocab.
+    * Each round's vocab is a LAZY local checkpoint: the next round's
+    * pair-count job materializes it, so a round costs only its argmax
+    * query, and the previous vocab's blocks are released once the new
+    * one exists. The merge table accumulates on the driver (it is
+    * O(merges) metadata) and returns as one local frame; the final
+    * vocab returns checkpointed, owned by the caller. */
+  private def induce(docs: DataFrame, maxRounds: Int, maxMerges: Int,
+      topN: Int => Int, onRound: (Int, Int) => Unit)(
+      accept: (IndexedSeq[(String, String, Long)], Int) =>
+        Seq[(String, String, Long)]): (DataFrame, DataFrame) = {
     var vocab = wordFreqs(docs)
       .withColumn("syms", initSyms(col("w")))
       .select(col("w"), col("freq"), col("syms"))
-      .localCheckpoint()
-    var merges: Option[DataFrame] = None
-    var done = 0
+      .localCheckpoint(eager = false)
+    var prev: Option[DataFrame] = None
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, Long)]
     var round = 0
     var exhausted = false
-    while (done < numMerges && !exhausted) {
-      val want = math.min(batch, numMerges - done)
+    while (round < maxRounds && merges.size < maxMerges && !exhausted) {
       val top = pairCounts(vocab)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(want + 1)
-        .collect() // O(batch) rows — bounded metadata, never data-scaled
+        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(topN(merges.size))
+        .collect()
+        .map(r => (r.getAs[String]("a"), r.getAs[String]("b"),
+          r.getAs[Long]("cnt"))).toIndexedSeq
+      prev.foreach(SessionCache.releaseFrame) // `vocab` is materialized
+      prev = None
       if (top.isEmpty) exhausted = true
       else {
-        // maximal disjoint prefix + strict cutoff (see scaladoc)
-        val used = scala.collection.mutable.Set.empty[String]
-        val prefix = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, Long)]
-        var stoppedCnt = 0L // count of the first conflicted/overflow pair
-        var i = 0
-        var stopped = false
-        while (i < top.length && !stopped && prefix.size < want) {
-          val (a, b, c) = (top(i).getAs[String]("a"),
-            top(i).getAs[String]("b"), top(i).getAs[Long]("cnt"))
-          if (used.contains(a) || used.contains(b)) {
-            stopped = true; stoppedCnt = c
-          } else {
-            prefix += ((a, b, c)); used += a; used += b; i += 1
-          }
-        }
-        // the (want+1)-th row (if present) is also a cutoff witness:
-        // pairs beyond the window could tie with the accepted tail
-        if (!stopped && i < top.length)
-          stoppedCnt = top(i).getAs[Long]("cnt")
-        val safe = prefix.takeWhile(_._3 > stoppedCnt)
-        val accepted =
-          if (safe.nonEmpty) safe.toSeq
-          else Seq(prefix.head) // head alone ≡ one sequential step
-        val rows = accepted.zipWithIndex.map { case ((a, b, c), j) =>
-          (done + j + 1, a, b, c)
-        }
-        val sess = vocab.sparkSession
-        import sess.implicits._
-        val batchDf = rows.toDF(
-          "merge_rank", "left_sym", "right_sym", "pair_count")
-          .select(col("merge_rank").cast("int"), col("left_sym"),
-            col("right_sym"), col("pair_count"))
-        merges = Some(merges.fold(batchDf)(_.union(batchDf)))
-        // bound the union tree: at production round counts (30k merges
-        // ≈ 1k rounds) an unbounded union would make the final
-        // checkpoint replan a 1k-branch tree; collapse every 64 ROUNDS
-        // (keyed on the round counter — partial-batch accepts make
-        // `done` advance by ~2.5/round, so a done-keyed condition both
-        // under-fires and re-fires; the merge table is O(done)
-        // metadata, the checkpoint is tiny)
-        if (round % 64 == 63)
-          merges = merges.map(_.localCheckpoint())
-        val old = vocab
-        val foldedSyms = accepted.foldLeft(col("syms")) {
-          case (c, (a, b, _)) => mergePair(c, lit(a), lit(b))
-        }
-        vocab = vocab.withColumn("syms", foldedSyms)
+        val accepted = accept(top, merges.size)
+        for ((a, b, c) <- accepted) merges += ((merges.size + 1, a, b, c))
+        prev = Some(vocab)
+        vocab = vocab.withColumn("syms", accepted.foldLeft(col("syms")) {
+            case (c, (a, b, _)) => mergePair(c, lit(a), lit(b))
+          })
           .select(col("w"), col("freq"), col("syms"))
-          .localCheckpoint()
-        SessionCache.releaseFrame(old)
-        done += accepted.size
+          .localCheckpoint(eager = false)
         round += 1
         onRound(round, accepted.size)
       }
     }
-    val out = merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)).localCheckpoint()
-    SessionCache.releaseFrame(vocab)
-    out
+    val out = vocab.localCheckpoint()
+    (prev.toSeq :+ vocab).foreach(SessionCache.releaseFrame)
+    val sess = docs.sparkSession
+    import sess.implicits._
+    (merges.toSeq.toDF("merge_rank", "left_sym", "right_sym", "pair_count"),
+      out)
   }
 
   /** FULL-BATCH induction — the APPROXIMATE production cadence
@@ -461,103 +462,18 @@ object Bpe {
   def trainFullBatch(docs: DataFrame, rounds: Int = ParallelRounds,
       k: Int = ParallelTopK, maxMerges: Int = Int.MaxValue,
       onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
-    var vocab = wordFreqs(docs)
-      .withColumn("syms", initSyms(col("w")))
-      .select(col("w"), col("freq"), col("syms"))
-      .localCheckpoint()
-    var merges: Option[DataFrame] = None
-    var done = 0
-    var round = 0
-    var exhausted = false
-    while (round < rounds && done < maxMerges && !exhausted) {
-      val top = pairCounts(vocab)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(k)
-        .collect() // O(k) rows — bounded metadata, never data-scaled
-      if (top.isEmpty) exhausted = true
-      else {
-        val ranked = top.map(r => (r.getAs[String]("a"),
-          r.getAs[String]("b"), r.getAs[Long]("cnt")))
+    val (m, v) = induce(docs, rounds, maxMerges, _ => k, onRound) {
+      (ranked, _) =>
         // one-hop domination: accepted iff no higher-RANKED top-k row
         // (accepted or not) shares a symbol — the NOT EXISTS the
         // oracle replays verbatim
-        val accepted = ranked.zipWithIndex.collect {
+        ranked.zipWithIndex.collect {
           case ((a, b, c), i) if !ranked.take(i).exists { case (x, y, _) =>
             x == a || x == b || y == a || y == b } => (a, b, c)
-        }.toSeq
-        val rows = accepted.zipWithIndex.map { case ((a, b, c), j) =>
-          (done + j + 1, a, b, c)
         }
-        val sess = vocab.sparkSession
-        import sess.implicits._
-        val batchDf = rows.toDF(
-          "merge_rank", "left_sym", "right_sym", "pair_count")
-          .select(col("merge_rank").cast("int"), col("left_sym"),
-            col("right_sym"), col("pair_count"))
-        merges = Some(merges.fold(batchDf)(_.union(batchDf)))
-        if (round % 64 == 63) merges = merges.map(_.localCheckpoint())
-        val old = vocab
-        val foldedSyms = accepted.foldLeft(col("syms")) {
-          case (c, (a, b, _)) => mergePair(c, lit(a), lit(b))
-        }
-        vocab = vocab.withColumn("syms", foldedSyms)
-          .select(col("w"), col("freq"), col("syms"))
-          .localCheckpoint()
-        SessionCache.releaseFrame(old)
-        done += accepted.size
-        round += 1
-        onRound(round, accepted.size)
-      }
     }
-    val out = merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)).localCheckpoint()
-    SessionCache.releaseFrame(vocab)
-    out
-  }
-
-  /** [[train]] plus the FINAL segmented vocab (w, freq, syms) — the
-    * other half of the tokenizer artifact (merges drive encoding of
-    * unseen text; the segmented vocab is the subword inventory and the
-    * fast path for seen types). Caller owns the vocab frame's
-    * checkpoint blocks. */
-  def trainWithVocab(docs: DataFrame, numMerges: Int = NumMerges)
-      : (DataFrame, DataFrame) = {
-    var vocab = wordFreqs(docs)
-      .withColumn("syms", initSyms(col("w")))
-      .select(col("w"), col("freq"), col("syms"))
-      .localCheckpoint()
-    var merges: Option[DataFrame] = None
-    var r = 1
-    var exhausted = false
-    while (r <= numMerges && !exhausted) {
-      val best = pairCounts(vocab)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
-        .select(lit(r).cast("int").as("merge_rank"),
-          col("a").as("left_sym"), col("b").as("right_sym"),
-          col("cnt").as("pair_count"))
-        .localCheckpoint()
-      if (best.isEmpty) exhausted = true
-      else {
-        merges = Some(merges.fold(best)(_.union(best)))
-        val old = vocab
-        vocab = vocab
-          .crossJoin(broadcast(
-            best.select(col("left_sym"), col("right_sym"))))
-          .withColumn("syms",
-            mergePair(col("syms"), col("left_sym"), col("right_sym")))
-          .select(col("w"), col("freq"), col("syms"))
-          .localCheckpoint()
-        SessionCache.releaseFrame(old)
-        r += 1
-      }
-    }
-    (merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)), vocab)
+    SessionCache.releaseFrame(v)
+    m
   }
 
   private val mergesCache = SessionCache.mkFrames()
@@ -612,20 +528,20 @@ object Bpe {
   private[graft] def clearBatchedMergesCache(): Unit =
     batchedMergesCache.clear()
 
-  /** The BATCHED trainer registered against the SAME oracle as
-    * [[bpeMerges]]: [[trainBatched]] is provably equivalent to
-    * sequential greedy, so the identical DuckDB induction replay must
-    * hash-match — the green row is an independent-engine proof of the
-    * batch rule on real data, on every verify run. Session-cached
-    * (the artifact contract is [[standingMerges]]'; this op exists to
-    * keep the production-cadence path under the correctness gate). */
+  /** The batched trainer at batch 4 registered against the SAME
+    * oracle as [[bpeMerges]] (whose store trains at the default batch
+    * 32): the batch rule is provably equivalent to sequential greedy,
+    * so the identical DuckDB induction replay must hash-match at both
+    * geometries — an independent-engine proof of the batch rule on
+    * real data, on every verify run. Session-cached (the artifact
+    * contract is [[standingMerges]]'). */
   val bpeMergesBatched: Op = Op("q_bpe_merges_batched",
     oracleInduction(NumMerges) +
       "\nSELECT * FROM merge_table") { (spark, dir) =>
     batchedMergesCache.getOrBuild(spark, dir, "documents.parquet") {
       trainBatched(Tables.documents(spark, dir)
         .filter(col("doc_id") % Dedup.IncrementalDeltaMod =!= 0),
-        NumMerges, batch = 4) // returns checkpointed
+        NumMerges, batch = 4)
     }
   }
 

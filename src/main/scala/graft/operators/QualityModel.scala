@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.functions.TextAnalysis.{asciiLower, bpeishTokenCount, fingerprint, wordShingles}
@@ -27,20 +29,23 @@ import graft.functions.TextAnalysis.{asciiLower, bpeishTokenCount, fingerprint, 
   *    the `q_hash_embed` kernel), a scaled bias (bucket −1), the BPE-ish
   *    token count (bucket −2), and the repetition percentage (bucket −3)
   *    — all BIGINT;
-  *  - epoch 1: w₁[b] = (S·Σᵢ yᵢxᵢ[b]) div n  (every doc misclassified
-  *    at w₀ = 0);
+  *  - epoch 1: w₁[b] = (S·Σᵢ yᵢxᵢ[b]) div n  (the epoch-t rule at
+  *    w₀ = 0: every margin is 0, so every doc is misclassified);
   *  - epoch t: margins mᵢ = Σ_b xᵢ[b]·w[b]; misclassified = {yᵢmᵢ ≤ 0};
   *    w_t[b] = w_{t−1}[b] + ((S div t)·Σ_miss yᵢxᵢ[b]) div |miss|.
   * Both engines truncate integer division toward zero (Spark `div`,
   * DuckDB `//`), so negative update sums agree exactly.
   *
-  * Scale shape: per epoch ONE delta-free pass — features join a
-  * broadcast ≤(D+3)-row weight table, one map-combinable per-doc margin
-  * aggregate, one map-combinable per-bucket update aggregate; the
-  * misclassified-count denominator rides a broadcast 1-row aggregate
-  * (no driver sync inside the loop). [[QualityEpochs]] epochs = that
-  * many passes, each over the skinny (doc, bucket, x) frame, which is
-  * built once and checkpointed. The trained weights persist AT REST
+  * Scale shape: the per-doc dense rows (y plus the [[QualityDim]]+3
+  * feature values) are built once in one group-by and persisted
+  * memory-and-disk, so at 100 TB they spill instead of growing the
+  * heap. Each of the [[QualityEpochs]] epochs is then ONE map-side
+  * fold (`treeAggregate`) whose result is [[QualityDim]]+3 sums and a
+  * miss count — O(dims) longs to the driver whatever the corpus size,
+  * partials merged in a tree so the driver never holds one per
+  * partition — and the driver applies the update to a 67-long weight
+  * vector that rides the next fold's closure. No shuffle, join or
+  * checkpoint inside the loop. The trained weights persist AT REST
   * ([[PersistedStore]] `quality_model`), so scoring — the only stage
   * that runs per-ingest — never retrains; the ops' oracles replay the
   * FULL training from SQL, proving persisted ≡ fresh.
@@ -78,7 +83,7 @@ object QualityModel {
     * features: (doc_id, n_tokens, n3, nd3) — BPE-ish token count,
     * 3-gram count and distinct-3-gram count (the repetition-gate
     * ingredients, integer so the rep feature/label replay exactly). */
-  private def docStats(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def docStats(spark: SparkSession, dir: String): DataFrame = {
     val nWords = size(split(asciiLower(trim(col("text"))), "[ \\t\\n\\x0B\\f\\r]+"))
     Tables.documents(spark, dir).select(
       col("doc_id"),
@@ -92,7 +97,7 @@ object QualityModel {
     * token count at/above the corpus P25 AND repetition percent ≤
     * [[RepPctMax]] (integer percent, so the oracle's rule is the same
     * arithmetic, not a double comparison). */
-  private def labels(stats: DataFrame): DataFrame = {
+  private[graft] def labels(stats: DataFrame): DataFrame = {
     val p25 = stats.agg(expr("percentile(n_tokens, 0.25)").as("p25"))
     stats.crossJoin(broadcast(p25))
       .select(col("doc_id"),
@@ -106,7 +111,7 @@ object QualityModel {
     * (the `q_hash_embed` kernel at [[QualityDim]]) plus the three stat
     * features. Every doc gets the stat rows, so zero-text documents
     * still score (margin from bias/stat weights alone). */
-  private def features(spark: SparkSession, dir: String,
+  private[graft] def features(spark: SparkSession, dir: String,
       stats: DataFrame): DataFrame = {
     val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -133,40 +138,84 @@ object QualityModel {
   // training
   // ------------------------------------------------------------------
 
-  /** Run the full training fold and return the final weights
-    * (bucket, w), zero weights dropped. Each epoch's weight table is
-    * checkpointed (≤ [[QualityDim]]+3 rows) so the plan stays flat. */
+  /** The training rows, one per document: its label y and its dense
+    * feature vector x, slot `bucket + 3` (stat buckets −3..−1 first,
+    * then hashed buckets 0..[[QualityDim]]−1). A NULL feature value is
+    * stored as 0, the SQL-SUM law of the relational form (it adds
+    * nothing). One group-by over the feature rows; persisted for the
+    * epoch loop, released by the caller. */
+  private def trainingRows(spark: SparkSession, dir: String)
+      : RDD[(Long, Array[Long])] = {
+    val stats = docStats(spark, dir)
+    features(spark, dir, stats)
+      .join(labels(stats), Seq("doc_id"))
+      .groupBy(col("doc_id"))
+      .agg(first(col("y")).as("y"),
+        collect_list(struct(col("bucket"), col("x"))).as("fx"))
+      .select(col("y"), col("fx"))
+      .rdd.map { r =>
+        val x = new Array[Long](QualityDim + 3)
+        r.getSeq[Row](1).foreach { e =>
+          if (!e.isNullAt(1)) {
+            val i = e.getLong(0).toInt + 3
+            x(i) = Math.addExact(x(i), e.getLong(1))
+          }
+        }
+        (r.getLong(0), x)
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** One epoch as ONE map-side fold: over the docs misclassified at
+    * `w` (y·margin ≤ 0, margin = Σ x·w), the per-slot sums of y·x,
+    * with their count in the last slot. Overflow throws (exact
+    * arithmetic, the ANSI `sum` law) instead of wrapping. */
+  private[graft] def epochFold(rows: RDD[(Long, Array[Long])],
+      w: Array[Long]): Array[Long] = {
+    val n = w.length
+    rows.treeAggregate(new Array[Long](n + 1))(
+      { case (acc, (y, x)) =>
+        var m = 0L
+        for (i <- 0 until n) m = Math.addExact(m, Math.multiplyExact(x(i), w(i)))
+        if (Math.multiplyExact(y, m) <= 0) {
+          for (i <- 0 until n)
+            acc(i) = Math.addExact(acc(i), Math.multiplyExact(y, x(i)))
+          acc(n) += 1
+        }
+        acc
+      },
+      { (a, b) =>
+        for (i <- a.indices) a(i) = Math.addExact(a(i), b(i))
+        a
+      })
+  }
+
+  /** The full training loop over [[trainingRows]]-shaped rows: the
+    * dense weights after [[QualityEpochs]] epochs, slot `bucket + 3`.
+    * Epoch t folds once ([[epochFold]]) and the driver applies
+    * w += ((S div t)·Σ) div max(|miss|, 1), truncating toward zero. */
+  private[graft] def trainDense(rows: RDD[(Long, Array[Long])])
+      : Array[Long] = {
+    val w = new Array[Long](QualityDim + 3)
+    for (t <- 1 to QualityEpochs) {
+      val s = epochFold(rows, w)
+      val nm = math.max(s(w.length), 1L)
+      val step = QualityScale / t
+      for (i <- w.indices)
+        w(i) = Math.addExact(w(i), Math.multiplyExact(step, s(i)) / nm)
+    }
+    w
+  }
+
+  /** Run the full training and return the final weights (bucket, w),
+    * zero weights dropped. */
   private[graft] def trainWeights(
       spark: SparkSession, dir: String): DataFrame = {
-    val stats = docStats(spark, dir)
-    val feat = features(spark, dir, stats).localCheckpoint()
-    val lab = labels(stats).localCheckpoint()
-    val nDocs = lab.count() // bounded: one scalar, once per training
-    var w = lab.join(feat, Seq("doc_id"))
-      .groupBy(col("bucket"))
-      .agg(expr(s"($QualityScale * sum(y * x)) div $nDocs").as("w"))
-      .localCheckpoint()
-    for (t <- 2 to QualityEpochs) {
-      val step = QualityScale / t
-      val margins = feat.join(broadcast(w), Seq("bucket"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("x") * col("w")).as("margin"))
-      val miss = lab.join(margins, Seq("doc_id"), "left")
-        .filter(col("y") * coalesce(col("margin"), lit(0L)) <= 0)
-        .select(col("doc_id"), col("y"))
-      // the |miss| denominator enters as a broadcast 1-row aggregate —
-      // no driver round-trip per epoch
-      val nm = miss.agg(greatest(count(lit(1)), lit(1L)).as("nm"))
-      val upd = miss.join(feat, Seq("doc_id")).crossJoin(broadcast(nm))
-        .groupBy(col("bucket"))
-        .agg(expr(s"($step * sum(y * x)) div min(nm)").as("du"))
-      w = w.join(upd, Seq("bucket"), "full_outer")
-        .select(col("bucket"),
-          (coalesce(col("w"), lit(0L)) + coalesce(col("du"), lit(0L)))
-            .as("w"))
-        .localCheckpoint()
-    }
-    w.filter(col("w") =!= 0)
+    val rows = trainingRows(spark, dir)
+    val w = try trainDense(rows) finally rows.unpersist()
+    import spark.implicits._
+    w.indices.filter(w(_) != 0).map(i => (i - 3L, w(i)))
+      .toDF("bucket", "w")
   }
 
   private val modelCache = SessionCache.mkFrames()

@@ -108,14 +108,36 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("batched induction == driver-steered train on real data (sf0.001)") {
+  test("batched induction == the plain-Scala reference on real data (sf0.001)") {
+    // word frequencies of the standing slice, counted in plain Scala
+    // with the token law's Java regex
+    val re = java.util.regex.Pattern.compile(Bpe.TokenRe)
+    val freqs = graft.Tables.documents(spark, sf001)
+      .filter($"doc_id" % Dedup.IncrementalDeltaMod =!= 0)
+      .select($"text").as[String].collect().filter(_ != null)
+      .flatMap { t =>
+        val m = re.matcher(t)
+        Iterator.continually(m).takeWhile(_.find()).map(_.group()).toSeq
+      }
+      .groupBy(identity).map { case (w, ws) => w -> ws.length.toLong }
+    val want = refTrain(freqs, Bpe.NumMerges)
+    assert(want.length === Bpe.NumMerges)
     val docs = graft.Tables.documents(spark, sf001)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("merge_rank").collect()
-        .map(r => (r.getAs[Int]("merge_rank"), r.getAs[String]("left_sym"),
-          r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
-    assert(key(Bpe.trainBatched(docs, Bpe.NumMerges, batch = 8)) ===
-      key(Bpe.train(docs, Bpe.NumMerges)))
+      .filter($"doc_id" % Dedup.IncrementalDeltaMod =!= 0)
+    assert(mergeKey(Bpe.trainBatched(docs, Bpe.NumMerges, batch = 8)) === want)
+    // the exact loop's final vocab: every word segmented by the
+    // reference merges applied in rank order
+    val (m, v) = Bpe.trainWithVocab(docs, Bpe.NumMerges)
+    assert(mergeKey(m) === want)
+    val gotVocab = v.select($"w", $"freq", $"syms")
+      .as[(String, Long, Seq[String])].collect()
+      .map { case (w, f, syms) => (w, (f, syms.toVector)) }.toMap
+    SessionCache.releaseFrame(v)
+    val wantVocab = freqs.map { case (w, f) =>
+      w -> (f, want.foldLeft(w.map(_.toString).toVector :+ Bpe.Marker) {
+        case (syms, (_, a, b, _)) => mergeScan(syms, a, b) })
+    }
+    assert(gotVocab === wantVocab)
   }
 
   // full-batch (approximate) law: the same one-hop domination rule in

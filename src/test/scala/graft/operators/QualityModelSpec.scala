@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The learned quality scorer's laws: the trained gate must be a real
@@ -8,6 +9,96 @@ import org.apache.spark.sql.functions._
   * model must equal a fresh training run, and the capstone wiring must
   * be the plain conjunction it claims. */
 class QualityModelSpec extends SparkSpec {
+
+  // ---- reference: the relational epoch fold the trainer replaced
+  // (shuffle joins and aggregates per epoch, every sum an ANSI SQL
+  // SUM) — the same law as the oracle's CTE chain ----
+  private def refTrainWeights(dir: String): DataFrame = {
+    val stats = QualityModel.docStats(spark, dir)
+    val feat = QualityModel.features(spark, dir, stats).localCheckpoint()
+    val lab = QualityModel.labels(stats).localCheckpoint()
+    val nDocs = lab.count()
+    var w = lab.join(feat, Seq("doc_id"))
+      .groupBy(col("bucket"))
+      .agg(expr(s"(${QualityModel.QualityScale} * sum(y * x)) div $nDocs")
+        .as("w"))
+      .localCheckpoint()
+    for (t <- 2 to QualityModel.QualityEpochs) {
+      val step = QualityModel.QualityScale / t
+      val margins = feat.join(broadcast(w), Seq("bucket"))
+        .groupBy(col("doc_id"))
+        .agg(sum(col("x") * col("w")).as("margin"))
+      val miss = lab.join(margins, Seq("doc_id"), "left")
+        .filter(col("y") * coalesce(col("margin"), lit(0L)) <= 0)
+        .select(col("doc_id"), col("y"))
+      val nm = miss.agg(greatest(count(lit(1)), lit(1L)).as("nm"))
+      val upd = miss.join(feat, Seq("doc_id")).crossJoin(broadcast(nm))
+        .groupBy(col("bucket"))
+        .agg(expr(s"($step * sum(y * x)) div min(nm)").as("du"))
+      w = w.join(upd, Seq("bucket"), "full_outer")
+        .select(col("bucket"),
+          (coalesce(col("w"), lit(0L)) + coalesce(col("du"), lit(0L)))
+            .as("w"))
+        .localCheckpoint()
+    }
+    w.filter(col("w") =!= 0)
+  }
+
+  private def weights(df: DataFrame): Seq[(Long, Long)] = {
+    import spark.implicits._
+    df.select(col("bucket"), col("w")).as[(Long, Long)].collect().sorted
+      .toSeq
+  }
+
+  test("trainer == the relational epoch fold, bit for bit (sf0.001, sf0.01)") {
+    for (dir <- Seq(sf001, sf001.stripSuffix("sf0.001") + "sf0.01")) {
+      val got = weights(QualityModel.trainWeights(spark, dir))
+      assert(got.nonEmpty, dir)
+      assert(got === weights(refTrainWeights(dir)), dir)
+    }
+  }
+
+  test("trainer == the relational fold on empty, whitespace-only and " +
+    "NULL-text documents") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-qm-").toString
+    try {
+      val base = graft.Tables.documents(spark, sf001).orderBy("doc_id")
+        .limit(80)
+      val odd = Seq((9000001L, Some("")), (9000002L, Some("  \t\n ")),
+        (9000003L, None), (9000004L, None), (9000005L, Some("\u000B")))
+        .toDF("doc_id", "text")
+      base.unionByName(odd, allowMissingColumns = true)
+        .write.parquet(s"$dir/documents.parquet")
+      val got = weights(QualityModel.trainWeights(spark, dir))
+      assert(got.nonEmpty)
+      assert(got === weights(refTrainWeights(dir)))
+    } finally graft.operators.SinkOps.deleteDir(spark, dir)
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("overflow raises ArithmeticException instead of wrapping " +
+    "(fold and driver update)") {
+    val dims = QualityModel.QualityDim + 3
+    def row(y: Long, x0: Long) = {
+      val x = new Array[Long](dims); x(0) = x0; (y, x)
+    }
+    // the fold: two misclassified docs whose y·x sum passes Long.MaxValue
+    val big = spark.sparkContext.parallelize(
+      Seq(row(1L, Long.MaxValue - 1), row(1L, 2L)), 2)
+    val e1 = intercept[Exception] {
+      QualityModel.epochFold(big, new Array[Long](dims))
+    }
+    assert(causes(e1).exists(_.isInstanceOf[ArithmeticException]), e1)
+    // the driver update: the sum fits, the step times the sum does not
+    val half = spark.sparkContext.parallelize(
+      Seq(row(1L, Long.MaxValue / 2)), 1)
+    assert(QualityModel.epochFold(half, new Array[Long](dims))(0) ===
+      Long.MaxValue / 2)
+    intercept[ArithmeticException](QualityModel.trainDense(half))
+  }
 
   test("trained gate is non-degenerate and agrees with the heuristic " +
     "teacher on >= 85% of documents") {
